@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main — times headline queries at SPARK_GRAFT_SF_DIR with a
   * `noop` write (forces full evaluation of every column: no driver
   * collect, no disk, no count()-style column pruning that would skip the
@@ -361,15 +359,7 @@ object Bench {
     val headlineNames: Seq[String] = headline
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
 
     // untimed warmup: JIT the scan/codegen/noop-write paths once so the
     // first timed query measures the query, not JVM cold start
@@ -393,13 +383,11 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      // untimed: materializing a shared subtree is part of the query,
-      // releasing its blocks afterwards is session hygiene
-      graft.plans.Checkpoints.releaseAll()
-      // untimed: shuffle files / broadcast blocks from prior queries are
-      // only reclaimed when driver GC fires the ContextCleaner's weak
-      // refs — without this, late-running queries measure ~2x slower
-      // from accumulated session state, not from their own plans
+      // untimed: checkpoint blocks, shuffle files and broadcast blocks
+      // from prior queries are only reclaimed when driver GC fires the
+      // ContextCleaner's weak refs — without this, late-running queries
+      // measure ~2x slower from accumulated session state, not from
+      // their own plans
       System.gc()
       dt
     }

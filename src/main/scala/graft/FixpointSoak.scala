@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.pipeline.FkRef
 import graft.subset.SubsetPlanner
@@ -36,14 +36,7 @@ object FixpointSoak {
     val mult = args.headOption.map(_.toInt).getOrElse(10)
     val baseRows = args.drop(1).headOption.map(_.toLong).getOrElse(400000L)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
 
     val ChainDepth = 12 // constant at both scales — see scaladoc
 
@@ -83,7 +76,7 @@ object FixpointSoak {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.plans.Checkpoints.releaseAll(); System.gc()
+      System.gc()
       dt
     }
     def noop(df: DataFrame): Unit =

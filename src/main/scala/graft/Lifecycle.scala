@@ -16,18 +16,8 @@ import java.nio.file.{Files, Paths}
   */
 object Lifecycle {
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  def session(): SparkSession =
+    LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
 
   /** Total on-disk bytes behind a DataFrame's input files (any Hadoop FS
     * scheme). One `listStatus` RPC per parent DIRECTORY rather than one

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Wall-clock scaling soak for the heaviest LLM-pipeline operator
@@ -25,14 +25,7 @@ object LlmSoak {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val mult = args.drop(1).headOption.map(_.toInt).getOrElse(10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
 
     // ---- staging (untimed): 1x and mult× copies as 32-file parquet
     def stageDocs(m: Int): String = {
@@ -62,7 +55,7 @@ object LlmSoak {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.plans.Checkpoints.releaseAll(); System.gc()
+      System.gc()
       dt
     }
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage task-metric profiler for registered queries: one warm pass
   * (JIT, page cache), then one PROFILED pass per query with a
@@ -27,15 +26,7 @@ object Profile {
     val names = if (args.nonEmpty) args.toSeq
       else Seq("q_bigram_xent", "q_dedup_spans", "q_dedup_cluster",
         "q_fuzzy_link_capped", "q_pg_archive_lineitem")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
     @volatile var recording = false
@@ -60,7 +51,7 @@ object Profile {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      graft.plans.Checkpoints.releaseAll(); System.gc()
+      System.gc()
       dt
     }
 

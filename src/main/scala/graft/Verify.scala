@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,17 +14,7 @@ object Verify {
         sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); surface it as epoch-nanos
-      // Long instead of failing the whole table read
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
@@ -42,9 +31,9 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
         e.getStackTrace.take(3).foreach(f => System.err.println(s"[verify]   at $f"))
       }
-      // each result is fully on disk — release any shared-subtree
-      // checkpoints the query materialized
-      graft.plans.Checkpoints.releaseAll()
+      // each result is fully on disk — let the ContextCleaner free the
+      // query's checkpoint and shuffle blocks before the next one
+      System.gc()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -94,11 +94,10 @@ object QualityClassifier {
     *
     * Storage note (ADVICE r18): the vocab aggregate below is
     * checkpointed through [[graft.plans.Checkpoints.materialize]] and
-    * registered ONLY in the global registry — a long-lived driver that
-    * calls nbQuality repeatedly must drain it with
-    * `Checkpoints.releaseAll()` once each result is consumed (the bench,
-    * Verify and the soaks already do), or vocab-sized blocks accumulate
-    * per call. */
+    * read by the returned plan, so its blocks live as long as that plan:
+    * a driver that calls nbQuality repeatedly holds one vocab-sized
+    * checkpoint per result it still references, and Spark's
+    * ContextCleaner frees each once its result is dropped and collected. */
   def nbQuality(df: DataFrame, idCol: String, textCol: String,
                 topV: Int = 4096): DataFrame = {
     // NOT widened (r18 measured negative, same-host A/B — tokenize-only

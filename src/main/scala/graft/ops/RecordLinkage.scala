@@ -28,22 +28,6 @@ object RecordLinkage {
       if (totalRows == 0L) 0.0 else droppedRows.toDouble / totalRows
   }
 
-  /** Snapshot of the most recent [[fuzzyJoin]] call's complete drop
-    * report. Written as ONE immutable map per call (never cleared then
-    * repopulated), so a concurrent reader always sees a self-consistent
-    * report from a single call — the r16 clear()/put() window could
-    * serve a map mixing sides from two interleaved calls. */
-  @volatile private var lastDrops: Map[String, CapDrop] = Map.empty
-
-  /** Per-side ("a"/"b") drop mass of the LAST capped [[fuzzyJoin]] pass —
-    * the observability hook for the silent-total-drop regime: a cap that
-    * swallows 100% of candidate mass reads as "no duplicates found"
-    * without it. Empty when the last call ran uncapped. Last-writer-wins
-    * under concurrency (always a complete single-call map, but "last" is
-    * whichever call finished most recently) — concurrent callers should
-    * use [[fuzzyJoinWithReport]], which returns the call's OWN report. */
-  def lastCapDrops: Map[String, CapDrop] = lastDrops
-
   /** Uppercased first `n` chars — the standard cheap block. */
   def prefixBlock(c: Column, n: Int = 3): Column = upper(substring(c, 1, n))
   def prefixBlockSql(c: String, n: Int = 3): String =
@@ -77,13 +61,9 @@ object RecordLinkage {
     *
     * STORAGE NOTE (capped calls only): each side's block census is
     * materialized via `Checkpoints.materialize` and stays referenced by
-    * the RETURNED plan (the anti-join reads it), so its blocks cannot be
-    * released here. A long-lived driver should use
-    * [[fuzzyJoinReleasable]] and call its per-call `releaseCensus()`
-    * once the result is consumed (VERDICT r17 #5); the censuses are
-    * ALSO registered for the global `Checkpoints.releaseAll()` drain,
-    * so batch drivers (Verify/Bench) keep their existing discipline
-    * and a double release is a harmless no-op.
+    * the RETURNED plan (the anti-join reads it), so its blocks live as
+    * long as that plan and are freed by Spark's ContextCleaner once the
+    * caller drops it.
     *
     * @param blockA / blockB blocking-key expressions over each side's
     *        text column (same key family on both sides for recall). */
@@ -94,70 +74,40 @@ object RecordLinkage {
     fuzzyJoinWithReport(a, aId, aText, blockA, b, bId, bText, blockB,
       maxDist, maxBlockSize, widenInputs)._1
 
-  /** [[fuzzyJoin]] plus the call's OWN per-side drop report — the
-    * concurrency-safe observability path (VERDICT r16 #3): the report is
-    * local to this invocation, so two interleaved capped calls cannot
-    * cross-talk the way the shared [[lastCapDrops]] hook can. The report
-    * is computed eagerly (the census aggregate runs inside this call),
-    * so reading it costs nothing extra. */
+  /** [[fuzzyJoin]] plus the call's OWN per-side ("a"/"b") drop report —
+    * the observability path for the silent-total-drop regime: a cap that
+    * swallows 100% of candidate mass reads as "no duplicates found"
+    * without it. The report is local to this invocation, so concurrent
+    * capped calls cannot cross-talk (VERDICT r16 #3), and it is computed
+    * eagerly (the census aggregate runs inside this call), so reading it
+    * costs nothing extra. Empty when the call ran uncapped. */
   def fuzzyJoinWithReport(a: DataFrame, aId: String, aText: String, blockA: Column,
                           b: DataFrame, bId: String, bText: String, blockB: Column,
                           maxDist: Int, maxBlockSize: Option[Int] = None,
                           widenInputs: Boolean = true)
       : (DataFrame, Map[String, CapDrop]) = {
-    val r = fuzzyJoinReleasable(a, aId, aText, blockA, b, bId, bText, blockB,
-      maxDist, maxBlockSize, widenInputs)
-    (r.pairs, r.report)
-  }
-
-  /** One capped-linkage call's full result: the pair stream, the
-    * per-side drop report, and THIS call's census release hook.
-    * `releaseCensus()` unpersists only the block-census checkpoints this
-    * invocation materialized — call it after the pair stream is fully
-    * consumed (the censuses back the over-cap anti-join in the returned
-    * plan and their lineage is truncated, so nothing can recompute them
-    * afterwards). Idempotent, and safe to combine with the global
-    * `Checkpoints.releaseAll()` drain (a second unpersist of the same
-    * blocks is a no-op). Uncapped calls release nothing. */
-  final case class ReleasableLinkage(pairs: DataFrame,
-                                     report: Map[String, CapDrop],
-                                     releaseCensus: () => Unit)
-
-  /** [[fuzzyJoinWithReport]] plus a PER-CALL census release hook
-    * (VERDICT r17 #5): a long-lived driver interleaving capped linkage
-    * calls with unrelated checkpointed work can release each call's own
-    * census blocks on consumption instead of draining the global
-    * registry — `releaseAll()` is a sledgehammer that would also free
-    * checkpoints still backing OTHER live results. */
-  def fuzzyJoinReleasable(a: DataFrame, aId: String, aText: String, blockA: Column,
-                          b: DataFrame, bId: String, bText: String, blockB: Column,
-                          maxDist: Int, maxBlockSize: Option[Int] = None,
-                          widenInputs: Boolean = true)
-      : ReleasableLinkage = {
     require(maxDist >= 0, "fuzzyJoin: maxDist must be >= 0")
     require(maxBlockSize.forall(_ > 0), "fuzzyJoin: maxBlockSize must be positive")
     val report = scala.collection.mutable.Map.empty[String, CapDrop]
-    val censuses = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // Cap enforcement is LOUD about what it drops (r15 verdict: at a
     // 100-replica duplication every mid-slice block exceeded the cap and
     // the operator returned 0 pairs with no signal — on a real pipeline
     // that reads as "no duplicates found"). The per-side block census is
     // materialized once and reused: a 1-row aggregate over it yields the
-    // dropped block/row mass (recorded in [[lastCapDrops]], printed on
+    // dropped block/row mass (returned in the report, printed on
     // stderr whenever anything was dropped), and its over-cap filter
     // feeds the same anti-join as before — no second census scan.
     def capped(df: DataFrame, side: String): DataFrame = maxBlockSize.fold(df) { cap =>
       val census = graft.plans.Checkpoints.materialize(
         df.groupBy("__blk").agg(count(lit(1)).as("__bn")))
-      // the two sides run concurrently (pool below); the per-call
-      // collections are the only shared mutable state
-      censuses.synchronized { censuses += census }
       val stat = census.agg(
         count(lit(1)), coalesce(sum("__bn"), lit(0L)),
         count(when(col("__bn") > cap, 1)),
         coalesce(sum(when(col("__bn") > cap, col("__bn"))), lit(0L))).head()
       val drop = CapDrop(stat.getLong(2), stat.getLong(3),
         stat.getLong(0), stat.getLong(1))
+      // the two sides run concurrently (pool below); the per-call
+      // report is the only shared mutable state
       report.synchronized { report.put(side, drop) }
       if (drop.droppedBlocks > 0L)
         Console.err.println(
@@ -201,27 +151,29 @@ object RecordLinkage {
       blockB.as("__blk"))
     val (left, right) = if (maxBlockSize.isEmpty) (side(aSel, "a"), side(bSel, "b"))
     else {
-      import scala.concurrent.{Await, Future, ExecutionContext}
-      import scala.concurrent.duration.Duration
+      import scala.concurrent.{Future, ExecutionContext}
       // Dedicated 2-thread pool per call (ADVICE r18): worker threads are
       // created by THIS thread's first submits, so Spark's inheritable
       // job-group/scheduler-pool local properties carry into both actions
       // (ExecutionContext.global threads may predate the caller and carry
       // someone else's), and nested capped calls can't starve a shared
-      // pool. Await BOTH futures before rethrowing: if one side fails
-      // while the sibling is mid-action, returning early would leak the
-      // sibling's census checkpoint past the per-call release hook.
+      // pool. Both sides finish before this call returns or throws — on
+      // a side's failure AND on an interrupt of this thread — so no
+      // census job outlives the call.
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      try {
-        val fa = Future(side(aSel, "a"))
-        val fb = Future(side(bSel, "b"))
-        Await.ready(fa, Duration.Inf)
-        Await.ready(fb, Duration.Inf)
-        // surface the FIRST side's failure first (deterministic), after
-        // both actions have quiesced
-        (Await.result(fa, Duration.Inf), Await.result(fb, Duration.Inf))
-      } finally pool.shutdown()
+      val fa = Future(side(aSel, "a"))
+      val fb = Future(side(bSel, "b"))
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, java.util.concurrent.TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted)
+        throw new InterruptedException("fuzzyJoin: interrupted during the block census")
+      // a terminated pool has completed both futures; surface the FIRST
+      // side's failure first (deterministic)
+      (fa.value.get.get, fb.value.get.get)
     }
     // COMPUTE-DENSE EXCHANGE PIN (r17, conditional): the block join
     // costs O(Σ |block_a|×|block_b|) Levenshtein DP cells but shuffles
@@ -240,14 +192,9 @@ object RecordLinkage {
     // coalesced), trading skew-splitting for not running the quadratic
     // stage on a byte-count's worth of cores. Blocks are atomic under
     // any partitioning — the cap stays the skew dial either way.
-    // SPARK_GRAFT_LINKAGE_PIN=1/0 forces the pin on/off (the A/B
-    // lever); unset routes by the session's coalescing policy.
-    val pinOn = sys.env.get("SPARK_GRAFT_LINKAGE_PIN") match {
-      case Some(v) => v != "0"
-      case None => !java.lang.Boolean.parseBoolean(
-        a.sparkSession.sessionState.conf.getConfString(
-          "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"))
-    }
+    val pinOn = !java.lang.Boolean.parseBoolean(
+      a.sparkSession.sessionState.conf.getConfString(
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst", "true"))
     val pinned = math.max(a.sparkSession.sparkContext.defaultParallelism,
       a.sparkSession.sessionState.conf.numShufflePartitions)
     def pin(df: DataFrame): DataFrame =
@@ -264,10 +211,7 @@ object RecordLinkage {
       .withColumn("dist", levenshtein(col("text_a"), col("text_b"), maxDist))
       .filter(col("dist") >= 0)
       .select("id_a", "id_b", "dist")
-    val snapshot = report.toMap
-    lastDrops = snapshot
-    ReleasableLinkage(out, snapshot,
-      () => censuses.foreach(graft.plans.Checkpoints.unpersistCheckpoint))
+    (out, report.toMap)
   }
 
   /** Per-block row counts on each side — the diagnostic to run BEFORE

@@ -12,39 +12,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * storage grows by one table copy per iteration (VERDICT r3 "What's
   * wrong #2"). One-shot materializations (a signature subtree read by two
   * consumers of the SAME returned plan) cannot release eagerly — the
-  * blocks back the caller's result — so they register here and the caller
-  * (Bench / Verify / a long-lived session) drains the registry once the
-  * result is consumed (round-4 advice). */
+  * blocks back the caller's result. They live exactly as long as the
+  * returned plan: Spark's ContextCleaner holds the checkpoint RDD weakly
+  * and unpersists it once the plan that reads it is garbage collected,
+  * so a driver that drops each result and lets the JVM collect (Bench's
+  * per-query `System.gc()`) frees them, and one that holds a result
+  * keeps them. */
 object Checkpoints {
 
-  private val tracked =
-    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
-
-  /** Eagerly localCheckpoint `df` and register the blocks for later
-    * [[releaseAll]]. Use for shared subtrees that are part of a RETURNED
-    * plan (alive until the caller finishes consuming the result). */
-  def materialize(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    out.queryExecution.logical match {
-      case l: LogicalRDD => tracked.add(l.rdd)
-      case _ => ()
-    }
-    out
-  }
-
-  /** Release every checkpoint registered by [[materialize]]. Call after
-    * the consuming action completes — the truncated-lineage RDDs cannot
-    * recompute, so never call mid-consumption. */
-  def releaseAll(): Unit = {
-    var rdd = tracked.poll()
-    while (rdd != null) {
-      rdd.unpersist(blocking = false)
-      rdd = tracked.poll()
-    }
-  }
-
-  /** Number of registered-but-unreleased checkpoints (spec hook). */
-  def trackedCount: Int = tracked.size()
+  /** Eagerly localCheckpoint `df`. Use for shared subtrees that are part
+    * of a RETURNED plan; the blocks live as long as that plan. */
+  def materialize(df: DataFrame): DataFrame = df.localCheckpoint(eager = true)
 
   /** Release the storage blocks behind a localCheckpoint'd DataFrame.
     * No-op (falls back to cache-manager unpersist) when the plan is not a

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Write `.explain("formatted")` for a set of registered queries to
   * per-query files — the plan evidence the optimization rounds commit
@@ -20,15 +19,7 @@ object DumpPlans {
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val names = if (args.length > 3) args(3).split(",").toSeq else graft.Bench.headline
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus, "ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       // a typo'd name must not produce a silently-thinner evidence set
@@ -46,7 +37,7 @@ object DumpPlans {
         } catch {
           case e: Throwable => println(s"[plans] $n FAILED: ${e.getMessage.take(160)}")
         }
-        graft.plans.Checkpoints.releaseAll()
+        System.gc()
       }
     }
     spark.stop()

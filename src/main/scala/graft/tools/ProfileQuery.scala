@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Split one registered query's wall time into CONSTRUCTION (the
   * `fn(spark, dir)` call — Catalyst analysis plus any eager
@@ -20,15 +19,7 @@ object ProfileQuery {
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
     val fn = SparkEntry.queries(name)
     // per-job ledger: id, wall ms, #tasks, sum of task times — says where
     // the serialized barriers are and how parallel each job actually ran
@@ -55,7 +46,7 @@ object ProfileQuery {
       }
     })
     fn(spark, dir).write.format("noop").mode("overwrite").save() // warm/JIT
-    graft.plans.Checkpoints.releaseAll()
+    System.gc()
     println("--- warm ---")
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()
@@ -65,7 +56,7 @@ object ProfileQuery {
       val t2 = System.nanoTime()
       println(f"rep$r: construct ${(t1 - t0) / 1e9}%.3f s + exec ${(t2 - t1) / 1e9}%.3f s" +
         f" = ${(t2 - t0) / 1e9}%.3f s")
-      graft.plans.Checkpoints.releaseAll()
+      System.gc()
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{LocalSession, SparkEntry}
 
 /** Ad-hoc single-query timer for plan iteration:
   *
@@ -21,15 +20,7 @@ object TimeQuery {
     val reps = if (args.length > 2) args(2).toInt else 3
     val staged = args.length > 3 && args(3) == "staged"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.Checkpoints.quietUnpersistWarnings()
+    val spark = LocalSession(cpus)
     val dir = if (staged) {
       val stageDir = s"/tmp/graft_timequery_${new java.io.File(baseDir).getName}"
       graft.pipeline.Catalog.tables.map(_.name).foreach { t =>
@@ -45,14 +36,14 @@ object TimeQuery {
     } else baseDir
     val fn = SparkEntry.queries(name)
     fn(spark, dir).write.format("noop").mode("overwrite").save() // warm/JIT
-    graft.plans.Checkpoints.releaseAll()
+    System.gc()
     (1 to reps).foreach { r =>
       val t0 = System.nanoTime()
       val df = fn(spark, dir)
       df.write.format("noop").mode("overwrite").save()
       println(f"rep$r: ${(System.nanoTime() - t0) / 1e9}%.3f s")
       if (r == reps) println(df.queryExecution.executedPlan.toString.take(60000))
-      graft.plans.Checkpoints.releaseAll()
+      System.gc()
     }
     spark.stop()
   }

@@ -27,9 +27,11 @@ object GraftBridge {
     * count we take for eagerness doubles as an exact Statistics, so
     * downstream joins still broadcast a small frontier.
     *
-    * Returns (checkpointed frame, row count). Release the blocks with
-    * `graft.plans.Checkpoints.unpersistCheckpoint` exactly like a
-    * `localCheckpoint` result. */
+    * Returns (checkpointed frame, row count). The blocks live as long as
+    * the returned plan — Spark's ContextCleaner frees them once it is
+    * garbage collected; a fix-point loop releases a superseded round
+    * sooner with `graft.plans.Checkpoints.unpersistCheckpoint`, exactly
+    * like a `localCheckpoint` result. */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
     val rdd = df.queryExecution.toRdd.map(_.copy())

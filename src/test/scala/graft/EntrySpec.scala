@@ -73,7 +73,7 @@ class EntrySpec extends SparkSpec {
       }
       assert(s.exchanges <= maxEx,
         s"$name has ${s.exchanges} hash exchanges (ceiling $maxEx) — a new shuffle appeared")
-      graft.plans.Checkpoints.releaseAll()
+      System.gc()
     }
     // the guard is only meaningful if AQE actually re-planned something
     assert(adaptiveSeen > 0, "no headline query produced an adaptive plan — AQE guard inspected nothing")

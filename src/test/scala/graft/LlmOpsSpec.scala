@@ -199,7 +199,6 @@ class LlmOpsSpec extends SparkSpec {
       if h <= 5
     } yield (a._1, b._1) -> h).toMap
     assert(wide.map(r => (r._1, r._2) -> r._3).toMap == want)
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("simhashPairs self-sizing: unknown corpus size probes the leaf and routes by measurement") {
@@ -223,12 +222,10 @@ class LlmOpsSpec extends SparkSpec {
     val wide = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3, cutoff = 10L)
     assert(planOf(wide).contains("sh2"), "cutoff 10 must route the 49-doc corpus WIDE")
     val wideSet = wide.as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    graft.plans.Checkpoints.releaseAll()
     // measured 49 << default cutoff (2^20) → narrow, probe leaf reused
     val narrow = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3)
     assert(!planOf(narrow).contains("sh2"), "default cutoff must keep 49 docs NARROW")
     val narrowSet = narrow.as[(Long, Long, Int)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    graft.plans.Checkpoints.releaseAll()
     // each route is pigeonhole-complete FOR ITS OWN SIGNATURE (radius 3
     // over 120 bits is a stricter estimator than over 60 — the sets are
     // not comparable across routes): brute-force both witnesses
@@ -247,7 +244,6 @@ class LlmOpsSpec extends SparkSpec {
     val explicitWide = Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3,
       expectedDistinctContents = 49L, cutoff = 10L)
     assert(planOf(explicitWide).contains("sh2"))
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("simhash collapse gate: both plan paths equal the brute-force pair set") {
@@ -275,7 +271,6 @@ class LlmOpsSpec extends SparkSpec {
         if h <= 3
       } yield (a._1, b._1) -> h).toMap
       assert(got == want, s"gate path diverged: got ${got.size}, want ${want.size}")
-      graft.plans.Checkpoints.releaseAll()
     }
   }
 
@@ -315,7 +310,6 @@ class LlmOpsSpec extends SparkSpec {
     }
     assert(Dedup.wideBandPlan(3) == (4, 30) && Dedup.wideBandPlan(5) == (6, 20) &&
       Dedup.wideBandPlan(7) == (8, 15) && Dedup.wideBandPlan(0) == (2, 60))
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("pointer-jumped cluster labels equal exact connected components on a chained corpus") {

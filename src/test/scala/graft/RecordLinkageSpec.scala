@@ -55,13 +55,15 @@ class RecordLinkageSpec extends SparkSpec {
       Seq((20L, "alpha"), (21L, "alphb"), (22L, "gamma"))).toDF("id", "t")
     val b = (Seq((101L, "nameXXX")) ++
       Seq((120L, "alpha"), (121L, "alphc"), (122L, "delta"))).toDF("id", "t")
-    def run(cap: Option[Int]) = RecordLinkage.fuzzyJoin(
-      a, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      b, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2, maxBlockSize = cap)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val uncapped = run(None)
-    val capped = run(Some(5))
+    def run(cap: Option[Int]) = {
+      val (pairs, drops) = RecordLinkage.fuzzyJoinWithReport(
+        a, "id", "t", RecordLinkage.suffixBlock(col("t")),
+        b, "id", "t", RecordLinkage.suffixBlock(col("t")),
+        maxDist = 2, maxBlockSize = cap)
+      (pairs.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet, drops)
+    }
+    val (uncapped, _) = run(None)
+    val (capped, drops) = run(Some(5))
     assert(uncapped.exists(_._2 == 101L), "hot-block pairs present uncapped")
     assert(!capped.exists(_._2 == 101L), "hot block survived the cap")
     assert(capped == uncapped.filterNot(_._2 == 101L),
@@ -74,41 +76,40 @@ class RecordLinkageSpec extends SparkSpec {
     assert(top.getString(0) == "XXX" && top.getLong(2) == 8L)
     // the cap run must have RECORDED what it dropped (loud, not silent):
     // side a lost the 8-row hot block, side b lost nothing
-    val drops = RecordLinkage.lastCapDrops
     assert(drops("a") == RecordLinkage.CapDrop(1L, 8L, 4L, 11L), drops)
     assert(drops("b") == RecordLinkage.CapDrop(0L, 0L, 4L, 4L), drops)
   }
 
   test("total-drop regime is reported, never silent (the sf10p shape)") {
     // EVERY block exceeds the cap on both sides — the operator returns
-    // 0 pairs by contract, and lastCapDrops must say 100% of the row
+    // 0 pairs by contract, and the report must say 100% of the row
     // mass was dropped (r15 verdict: "0 pairs" with no signal reads as
     // "no duplicates found", which is silently wrong)
     val a = (1L to 40L).map(i => (i, s"dup${i % 2}")).toDF("id", "t")
     val b = (101L to 140L).map(i => (i, s"dup${i % 2}")).toDF("id", "t")
-    val out = RecordLinkage.fuzzyJoin(
+    val (out, drops) = RecordLinkage.fuzzyJoinWithReport(
       a, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b, "id", "t", RecordLinkage.suffixBlock(col("t")),
       maxDist = 2, maxBlockSize = Some(5))
     assert(out.count() == 0L)
-    val drops = RecordLinkage.lastCapDrops
     assert(drops("a").droppedRowFraction == 1.0 &&
       drops("b").droppedRowFraction == 1.0, drops)
     assert(drops("a") == RecordLinkage.CapDrop(2L, 40L, 2L, 40L), drops)
-    // an uncapped call clears the record — no stale drop stats
-    RecordLinkage.fuzzyJoin(
+    // an uncapped call reports nothing
+    val (all, none) = RecordLinkage.fuzzyJoinWithReport(
       a, "id", "t", RecordLinkage.suffixBlock(col("t")),
       b, "id", "t", RecordLinkage.suffixBlock(col("t")),
-      maxDist = 2).count()
-    assert(RecordLinkage.lastCapDrops.isEmpty)
+      maxDist = 2)
+    all.count()
+    assert(none.isEmpty)
   }
 
   test("fuzzyJoinWithReport: two interleaved capped calls keep their own reports") {
-    // VERDICT r16 #3 / ADVICE: the old global registry was cleared at the
-    // start of every call, so two concurrent capped calls could serve a
-    // report mixing sides from different calls. The per-call return value
-    // must be immune: run two calls with DIFFERENT drop shapes on two
-    // threads, repeatedly, and each must come back with exactly its own.
+    // VERDICT r16 #3 / ADVICE: a shared last-call report could serve two
+    // concurrent capped calls a map mixing sides from different calls.
+    // The per-call return value must be immune: run two calls with
+    // DIFFERENT drop shapes on two threads, repeatedly, and each must
+    // come back with exactly its own.
     val a1 = (1L to 8L).map(i => (i, "hotAAA")).toDF("id", "t") // 8-row hot block
     val b1 = Seq((101L, "hotAAA"), (102L, "clean1")).toDF("id", "t")
     val a2 = (1L to 40L).map(i => (i, s"dup${i % 2}")).toDF("id", "t") // total drop
@@ -135,10 +136,6 @@ class RecordLinkageSpec extends SparkSpec {
       assert(r1("b").totalRows == 2L && r2("b").totalRows == 40L,
         s"side-b reports crossed: $r1 / $r2")
     }
-    // the legacy hook still serves SOME complete single-call map
-    val last = RecordLinkage.lastCapDrops
-    assert(last("a") == expect1a || last("a") == expect2a, last)
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("entityClusters: transitive merge over a chain, singletons kept, dup edges ok") {
@@ -224,7 +221,7 @@ class RecordLinkageSpec extends SparkSpec {
     // user-specified repartition in the plan); parallelismFirst=false
     // (the prod-recommended setting) coalesces toward the 64 MB
     // advisory target — a compute-dense ~MB shuffle would land on ~1
-    // task — so the pin fires. The lever env is unset in test runs.
+    // task — so the pin fires.
     val a = Seq((1L, "abc"), (2L, "abd")).toDF("id", "t")
     def repartitions: Int = {
       val df = RecordLinkage.fuzzyJoin(a, "id", "t", lit("k"),
@@ -253,51 +250,88 @@ class RecordLinkageSpec extends SparkSpec {
     assert(out.values.toSet == Set(1L) && out.size == 12)
   }
 
-  test("fuzzyJoinReleasable: per-call census release, no net persisted-block growth") {
+  test("fuzzyJoinWithReport: census blocks outlive the call, not the result") {
     import spark.implicits._
-    // drain anything earlier suites left behind so the baseline is ours
-    graft.plans.Checkpoints.releaseAll()
     val df = ((1L to 40L).map(i => (i, "HOT_block_shared")) ++
       (41L to 50L).map(i => (i, s"CLD_$i"))).toDF("id", "nm")
     def persistedIds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    // two sequential capped calls, each consumed then released — the
-    // long-lived-driver pattern VERDICT r17 #5 asks for (no global
-    // releaseAll between them). Tracked by the call's OWN rdd ids, not a
-    // global count: the ContextCleaner can GC unrelated stale blocks
-    // mid-test and a count baseline would drift under it.
+    // two sequential capped calls, each consumed then dropped — the
+    // long-lived-driver pattern VERDICT r17 #5 asks for. Tracked by the
+    // call's OWN rdd ids, not a global count: the ContextCleaner can
+    // free unrelated stale blocks mid-test and a count would drift.
     for (cap <- Seq(20, 30)) {
-      val before = persistedIds
-      val r = RecordLinkage.fuzzyJoinReleasable(
-        df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
-        df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
-        maxDist = 2, maxBlockSize = Some(cap))
-      r.pairs.collect()
-      assert(r.report("a").droppedBlocks == 1L, "hot block capped on side a")
-      val own = persistedIds -- before
-      assert(own.nonEmpty, "census blocks live while the result is consumed")
-      r.releaseCensus()
-      // unpersist is async (blocking=false) — poll briefly
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while ((persistedIds & own).nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-      assert((persistedIds & own).isEmpty,
-        s"cap=$cap: this call's census blocks must be gone after releaseCensus()")
+      val mark = nextRddId()
+      // the pair stream goes out of scope when this method returns
+      def consume(): Unit = {
+        val (pairs, report) = RecordLinkage.fuzzyJoinWithReport(
+          df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
+          df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
+          maxDist = 2, maxBlockSize = Some(cap))
+        pairs.collect()
+        assert(report("a").droppedBlocks == 1L, "hot block capped on side a")
+        System.gc(); Thread.sleep(300)
+        assert(persistedIds.exists(_ >= mark), "census blocks live while the result is held")
+        pairs.collect() // still readable after a GC: nothing was freed early
+      }
+      consume()
+      val left = persistedSince(mark)
+      assert(left.isEmpty,
+        s"cap=$cap: this call's census blocks must be gone once its result is dropped: $left")
     }
-    // double release + global drain stay harmless no-ops
-    val again = RecordLinkage.fuzzyJoinReleasable(
-      df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
-      df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
-      maxDist = 1, maxBlockSize = Some(20))
-    again.pairs.collect()
-    again.releaseCensus()
-    again.releaseCensus()
-    graft.plans.Checkpoints.releaseAll()
-    // uncapped calls materialize no census: nothing to release
-    val un = RecordLinkage.fuzzyJoinReleasable(
+    // uncapped calls materialize no census and report nothing
+    val (un, report) = RecordLinkage.fuzzyJoinWithReport(
       df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3),
       df, "id", "nm", RecordLinkage.prefixBlock(col("nm"), 3), maxDist = 1)
-    un.pairs.collect()
-    assert(un.report.isEmpty)
-    un.releaseCensus()
+    un.collect()
+    assert(report.isEmpty)
   }
+
+  test("capped call interrupted mid-census returns with no active jobs") {
+    import spark.implicits._
+    // each side's census job sleeps 3 s per row, so an interrupt that
+    // lands while it runs would, on an early return, leave it running
+    val entered = RecordLinkageSpec.slowRows
+    entered.set(0)
+    val slow = udf { (t: String) =>
+      RecordLinkageSpec.slowRows.incrementAndGet(); Thread.sleep(3000); t }
+    val a = Seq((1L, "abc"), (2L, "abd")).toDF("id", "t").repartition(2)
+      .select(col("id"), slow(col("t")).as("t"))
+    val tracker = spark.sparkContext.statusTracker
+    @volatile var outcome: Either[Throwable, Unit] = null
+    @volatile var activeAtReturn: Seq[Int] = null
+    val caller = new Thread(() => {
+      outcome = try {
+        // the block key reads the slow column, so the census runs the UDF
+        RecordLinkage.fuzzyJoinWithReport(
+          a, "id", "t", RecordLinkage.prefixBlock(col("t"), 2),
+          a.select(col("id").as("i2"), col("t").as("t2")), "i2", "t2",
+          RecordLinkage.prefixBlock(col("t2"), 2),
+          maxDist = 1, maxBlockSize = Some(10))
+        Right(())
+      } catch { case e: Throwable => Left(e) }
+      // job-end events reach the status store through the async listener
+      // bus; allow it to drain, which is far shorter than a census job
+      val deadline = System.nanoTime() + 1_000_000_000L
+      var active = tracker.getActiveJobIds().toSeq
+      while (active.nonEmpty && System.nanoTime() < deadline) {
+        Thread.sleep(20); active = tracker.getActiveJobIds().toSeq
+      }
+      activeAtReturn = active
+    })
+    caller.start()
+    val deadline = System.nanoTime() + 30_000_000_000L
+    while (entered.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(entered.get > 0, "census jobs never started")
+    caller.interrupt()
+    caller.join(60000)
+    assert(!caller.isAlive, "capped call did not return")
+    assert(activeAtReturn.isEmpty, s"census jobs outlived the call: $activeAtReturn")
+    assert(outcome.swap.exists(_.isInstanceOf[InterruptedException]), outcome)
+  }
+}
+
+object RecordLinkageSpec {
+  /** Rows the interrupt spec's slow UDF has started on (local-mode tasks
+    * run in this JVM, so the UDF reaches this object directly). */
+  val slowRows = new java.util.concurrent.atomic.AtomicInteger()
 }

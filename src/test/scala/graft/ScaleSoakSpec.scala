@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.llm.{Corpus, Dedup}
 import graft.pipeline.FkRef
 import graft.subset.SubsetPlanner
-import graft.plans.{Checkpoints, FixpointStats}
+import graft.plans.FixpointStats
 
 /** 10x scale soak of the fix-point operators — pins the "survives 100x"
   * claim with measurements instead of plan-shape argument (round-6 advice
@@ -25,11 +25,12 @@ class ScaleSoakSpec extends SparkSpec {
       .reduce(_ unionByName _)
 
   test("LSH clustering: 10x rows, flat iteration count, bounded storage blocks") {
+    // storage = this run's RDDs still persisted once its result is dropped
     def run(df: DataFrame): (Long, Int, Int) = {
+      val mark = nextRddId()
       val n = Dedup.minhashLshClusters(df, "doc_id", "text").count()
       val iters = FixpointStats.last("minhashLshClusters").get
-      Checkpoints.releaseAll()
-      (n, iters, spark.sparkContext.getRDDStorageInfo.length)
+      (n, iters, persistedSince(mark).size)
     }
     val (n1, i1, b1) = run(docs)
     val (n10, i10, b10) = run(inflate(docs, 10))
@@ -49,13 +50,12 @@ class ScaleSoakSpec extends SparkSpec {
       col("id"),
       when(col("id") === 0, lit(null)).otherwise((col("id") / 2).cast("long")).as("parent_id"))
     def run(n: Long): (Long, Int, Int) = {
-      val surviving = SubsetPlanner.plan(Map("t" -> chain(n)), Map("t" -> Seq("id")),
+      val mark = nextRddId()
+      val rows = SubsetPlanner.plan(Map("t" -> chain(n)), Map("t" -> Seq("id")),
         Seq(FkRef("t", Seq("parent_id"), "t", Seq("id"), nullable = true)),
-        Map("t" -> Seq("id % 10 <> 3")))
-      val rows = surviving("t").count()
+        Map("t" -> Seq("id % 10 <> 3")))("t").count()
       val iters = FixpointStats.last("selfFkClosure").get
-      Checkpoints.releaseAll()
-      (rows, iters, spark.sparkContext.getRDDStorageInfo.length)
+      (rows, iters, persistedSince(mark).size)
     }
     val (r1, i1, b1) = run(2000)
     val (r10, i10, b10) = run(20000)
@@ -82,7 +82,6 @@ class ScaleSoakSpec extends SparkSpec {
           FkRef("b", Seq("a_ref"), "a", Seq("id"), nullable = false)),
         Map("a" -> Seq("id % 8 <> 3"), "b" -> Nil))
       val rows = surviving("a").count() + surviving("b").count()
-      Checkpoints.releaseAll()
       (rows, FixpointStats.last("cyclicSubset").get)
     }
     val (r1, i1) = run(20)
@@ -204,11 +203,8 @@ class ScaleSoakSpec extends SparkSpec {
   }
 
   test("boilerplate-line removal scales linearly in rows at 10x") {
-    def run(df: DataFrame): Long = {
-      val n = Corpus.removeBoilerplateLines(df, "doc_id", "text", minDocs = 3).count()
-      Checkpoints.releaseAll()
-      n
-    }
+    def run(df: DataFrame): Long =
+      Corpus.removeBoilerplateLines(df, "doc_id", "text", minDocs = 3).count()
     val n1 = run(docs)
     val n10 = run(inflate(docs, 10))
     assert(n10 == n1 * 10) // one rewritten row per doc at both scales
@@ -227,7 +223,6 @@ class ScaleSoakSpec extends SparkSpec {
       val agg = out.agg(count(lit(1)), countDistinct("cluster")).head()
       val maxSize = out.groupBy("cluster").agg(count(lit(1)).as("n"))
         .agg(max("n")).head().getLong(0)
-      Checkpoints.releaseAll()
       (agg.getLong(0), agg.getLong(1), maxSize)
     }
     val (n1, k1, max1) = run(e)

@@ -24,7 +24,6 @@ class SemDedupSpec extends SparkSpec {
     assert(keep(1L), "min id of the duplicate group must survive")
     assert(keep(2L), "non-duplicate must survive")
     assert(!keep(3L) && !keep(4L), "higher-id duplicates must be dropped")
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("two-level semdedup: keep rule matches a brute-force check of its own clusters") {
@@ -37,7 +36,6 @@ class SemDedupSpec extends SparkSpec {
     val tau = 0.45
     val out = Similarity.semDedupTwoLevel(e, "vec_id", "embedding", k = 0, tau = tau)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    graft.plans.Checkpoints.releaseAll()
     val n = e.count()
     assert(out.length == n, "one row per vector")
     val ids = out.map(_._1).toSet
@@ -84,11 +82,9 @@ class SemDedupSpec extends SparkSpec {
     ).toDF("vec_id", "embedding")
     val a = Similarity.semDedupTwoLevel(df, "vec_id", "embedding", k = 4, tau = 0.9)
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    graft.plans.Checkpoints.releaseAll()
     val b = Similarity.semDedupTwoLevel(df.repartition(5), "vec_id", "embedding",
         k = 4, tau = 0.9)
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    graft.plans.Checkpoints.releaseAll()
     assert(a.length == 6, "one row per vector, zero-norm included")
     assert(a.toSeq == b.toSeq, "deterministic under repartitioning")
     // NaN orders GREATER than every number on both engines, so the drop
@@ -156,7 +152,6 @@ class SemDedupSpec extends SparkSpec {
     val flatKeep = keepRule(flatCell)
     val flatEng = Similarity.semDedup(df, "vec_id", "embedding", k = k, tau = tau)
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getBoolean(2))).sortBy(_._1)
-    graft.plans.Checkpoints.releaseAll()
     assert(flatEng.toSeq == ids.map(id => (id, flatCell(id), flatKeep(id))),
       s"flat parity broke: engine=${flatEng.toSeq}")
     // ---- two-level mini-oracle: k1 coarse, per-cell rank-f fine seeds
@@ -174,7 +169,6 @@ class SemDedupSpec extends SparkSpec {
     val twoKeep = keepRule(cluster)
     val twoEng = Similarity.semDedupTwoLevel(df, "vec_id", "embedding", k = k, tau = tau)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1)
-    graft.plans.Checkpoints.releaseAll()
     assert(twoEng.toSeq == ids.map(id => (id, cluster(id), twoKeep(id))),
       s"two-level parity broke: engine=${twoEng.toSeq}")
     // the stress case actually fired: a zero-norm vector served as seed
@@ -187,11 +181,9 @@ class SemDedupSpec extends SparkSpec {
       .select("vec_id", "embedding")
     val a = Similarity.semDedupTwoLevel(e, "vec_id", "embedding", k = 0, tau = 0.45)
       .orderBy("vec_id").collect().toSeq
-    graft.plans.Checkpoints.releaseAll()
     val b = Similarity.semDedupTwoLevel(e.repartition(7), "vec_id", "embedding",
         k = 0, tau = 0.45)
       .orderBy("vec_id").collect().toSeq
-    graft.plans.Checkpoints.releaseAll()
     assert(a == b)
   }
 
@@ -238,7 +230,6 @@ class SemDedupSpec extends SparkSpec {
     def run(df: org.apache.spark.sql.DataFrame) = {
       val r = Similarity.semDedup(df, "vec_id", "embedding", k = 4, tau = 0.8)
         .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).toSeq
-      graft.plans.Checkpoints.releaseAll()
       r
     }
     assert(run(docs.repartition(7)) == run(docs.coalesce(1)))
@@ -262,7 +253,6 @@ class SemDedupSpec extends SparkSpec {
     // the duplicate pair 1,2: both cosine-1.0 to their centroid, so id
     // breaks the tie -> 1 ranks strictly before 2
     if (out.contains(1L) && out.contains(2L)) assert(out(1L) < out(2L))
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("prototypes: rank is partition-count invariant on the fixture") {
@@ -281,6 +271,5 @@ class SemDedupSpec extends SparkSpec {
     assert(out.count() == n)
     assert(out.select("vec_id").distinct().count() == n)
     assert(out.filter(col("cluster") < 0 || col("cluster") >= 8).count() == 0)
-    graft.plans.Checkpoints.releaseAll()
   }
 }

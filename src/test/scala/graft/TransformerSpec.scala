@@ -196,29 +196,33 @@ class TransformerSpec extends SparkSpec {
     assert(out(2)._2 == "'it''s a city'")
   }
 
-  test("shared-subtree checkpoints release through Checkpoints.releaseAll") {
+  test("shared-subtree checkpoints live with their results, freed once dropped") {
     import graft.llm.Dedup
-    import graft.plans.Checkpoints
+    import org.apache.spark.sql.execution.LogicalRDD
     val docs = Seq((1L, "aa bb cc dd ee"), (2L, "aa bb cc dd ee"), (3L, "zz yy xx"))
       .toDF("doc_id", "text")
-    Checkpoints.releaseAll() // clean slate
-    val before = spark.sparkContext.getRDDStorageInfo.length
+    val mark = nextRddId()
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet
     // three ops that materialize shared subtrees: minhashLsh checkpoints
     // its exploded band edges (1); simhashHammingPairs its signatures (1);
-    // jaccardPairs its content digests + group membership + band edges (3)
-    Dedup.minhashLsh(docs, "doc_id", "text").collect()
-    Dedup.simhashHammingPairs(docs, "doc_id", "text").collect()
-    Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.0).collect()
-    assert(Checkpoints.trackedCount == 5)
-    Checkpoints.releaseAll()
-    assert(Checkpoints.trackedCount == 0)
-    // unpersist is async; poll briefly for the blocks to drop
-    val deadline = System.nanoTime() + 10e9.toLong
-    var after = spark.sparkContext.getRDDStorageInfo.length
-    while (after > before && System.nanoTime() < deadline) {
-      Thread.sleep(100); after = spark.sparkContext.getRDDStorageInfo.length
+    // jaccardPairs its content digests + group membership + band edges
+    // (3, of which the digests only build the membership, so 2 are plan
+    // leaves). Held results keep their checkpoint leaves across an action
+    // and a GC; the results go out of scope when this method returns.
+    def consumeHeld(): Set[Int] = {
+      val held = Seq(Dedup.minhashLsh(docs, "doc_id", "text"),
+        Dedup.simhashHammingPairs(docs, "doc_id", "text"),
+        Dedup.jaccardPairs(docs, "doc_id", "text", threshold = 0.0))
+      held.foreach(_.collect())
+      val leaves = held.flatMap(_.queryExecution.logical.collect {
+        case l: LogicalRDD => l.rdd.id }).toSet
+      System.gc(); Thread.sleep(300)
+      assert(leaves.subsetOf(persisted), s"held checkpoints lost: ${leaves -- persisted}")
+      leaves
     }
-    assert(after <= before, s"checkpoint blocks not released: $before -> $after")
+    assert(consumeHeld().size == 4)
+    val left = persistedSince(mark)
+    assert(left.isEmpty, s"checkpoint blocks not released: $left")
   }
 
   test("Registry template factories: person default, address required") {

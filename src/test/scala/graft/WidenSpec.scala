@@ -139,7 +139,6 @@ class WidenSpec extends SparkSpec {
     val a = rows(Similarity.semDedup(narrow, "vec_id", "embedding", k = 6, tau = 0.9))
     val b = rows(Similarity.semDedup(embFixture.repartition(target), "vec_id", "embedding", k = 6, tau = 0.9))
     assert(a == b)
-    graft.plans.Checkpoints.releaseAll()
   }
 
   test("fuzzyJoin stream sides widen a one-file scan into the quadratic stage") {
